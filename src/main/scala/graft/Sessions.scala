@@ -10,6 +10,15 @@ object Sessions {
       // custom Catalyst kernels as SQL functions (simhash64, minhash_signature,
       // float_array_dot, ngram_hashes, rolling_fingerprints, pair_array)
       .withExtensions(new graft.plans.GraftExtensions)
+      // the path surface as a catalog: txlog.`/root` is a table of it,
+      // so Spark's own grammar serves SELECT/INSERT/DML/DDL on paths.
+      // Spark's direct file query (`<format>`.`<path>`) is off: it would
+      // claim every two-part name whose head is a source name — txlog is
+      // one — and refuse txlog.`/root` whenever the catalog resolves it
+      // in a later analyzer pass (TIMESTAMP AS OF <expression>)
+      .config("spark.sql.catalog.txlog",
+        classOf[graft.plans.TxPathCatalog].getName)
+      .config("spark.sql.runSQLOnFiles", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -78,15 +78,29 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the fixed-point operator-optimization batch)
     ext.injectOptimizerRule(session => RollupRewriteRule(session))
 
-    // batch read path for spark.read.format("txlog"): substitutes the
-    // provider relation with the full readTable plan (mapping projection,
-    // deletion-vector anti-join, TxFileIndex pruning, time travel)
+    // SELECT ... FROM table_changes('txlog.`/root`', from [, to]): the
+    // batch change feed as a table function
+    ext.injectTableFunction((FunctionIdentifier("table_changes"),
+      info("table_changes", "_FUNC_(table, from[, to]) - change feed " +
+        "of a txlog table over the (from, to] version window"),
+      args => graft.streaming.TxBatchReadRule(
+        org.apache.spark.sql.SparkSession.active).tableChanges(args)))
+
+    // MERGE / UPDATE / DELETE on txlog tables: Spark's resolved
+    // row-level commands map onto the transactional front doors. Runs
+    // before the read rule, which leaves a DML target in place for it
+    ext.injectResolutionRule(session => TxDmlRule(session))
+
+    // batch read path for spark.read.format("txlog") and txlog catalog
+    // tables: substitutes the relation with the full readTable plan
+    // (mapping projection, deletion-vector anti-join, TxFileIndex
+    // pruning, time travel)
     ext.injectResolutionRule(session =>
       graft.streaming.TxBatchReadRule(session))
 
-    // SQL DML front-end: MERGE/UPDATE/DELETE/RESTORE/DESCRIBE/VACUUM on
-    // txlog.`<root>` tables route to the transactional front doors;
-    // everything else delegates to Spark's parser untouched
+    // the txlog verbs Spark has no grammar for (OPTIMIZE, VACUUM,
+    // RESTORE, DESCRIBE HISTORY|DETAIL, CONVERT TO TXLOG, SHOW
+    // PARTITIONS); everything else delegates to Spark's parser untouched
     ext.injectParser((session, delegate) =>
       new GraftSqlParser(session, delegate))
   }

@@ -39,20 +39,21 @@ import graft.sources.TxLog
   * (`<root>/<ns...>/<table>.tbl`: location + partition columns) —
   * namespaces are directories; the table STATE lives entirely in the
   * table's own transaction log, so the path surface (txlog.`/data/
-  * orders`) and the name surface address the SAME state and can be used
-  * interchangeably. Schema is RECORDED FROM DATA at the first
-  * transactional write (the engine's schema-from-data stance) — CREATE
-  * TABLE registers the pointer; a declared column list is accepted (CTAS
-  * passes the query's) but the log's recorded schema is authoritative.
-  * DROP TABLE unregisters the pointer and leaves the data (external-
-  * table semantics; the log IS the table). */
+  * orders`, [[TxPathCatalog]]) and the name surface address the SAME
+  * state and can be used interchangeably. Schema is RECORDED FROM DATA
+  * at the first transactional write (the engine's schema-from-data
+  * stance) — CREATE TABLE registers the pointer; a declared column list
+  * is accepted (CTAS passes the query's) but the log's recorded schema is
+  * authoritative. DROP TABLE unregisters the pointer and leaves the data
+  * (external-table semantics; the log IS the table). MERGE / UPDATE /
+  * DELETE resolve through Spark's grammar and [[TxDmlRule]]. */
 class TxCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog {
 
-  private var catName: String = _
+  protected var catName: String = _
   private var rootDir: String = _
 
-  private def spark: SparkSession = SparkSession.active
+  protected def spark: SparkSession = SparkSession.active
   private def fs(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -74,33 +75,64 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   private def tblFile(ident: Identifier): Path =
     new Path(nsDir(ident.namespace), s"${ident.name}.tbl")
 
-  /** pointer-file codec: line 1 = location, line 2 = partition columns
-    * (comma-joined; empty until known). */
-  private def writePointer(f: Path, location: String,
-                           partCols: Seq[String]): Unit = {
+  // ---- the pointer: the one place a NAME becomes a table root --------
+  // ([[TxPathCatalog]] replaces these three with the identity)
+
+  /** (location, partition columns) of a registered table; None when the
+    * name is unregistered. Pointer-file codec: line 1 = location, line 2
+    * = partition columns (comma-joined; empty until known). */
+  protected def pointer(ident: Identifier): Option[(String, Seq[String])] = {
+    val f = tblFile(ident)
+    if (!fs(f).exists(f)) None
+    else {
+      val in = fs(f).open(f)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+                finally in.close()
+      val lines = txt.split("\n", -1)
+      Some((lines(0), if (lines.length > 1 && lines(1).nonEmpty)
+        lines(1).split(",").toSeq else Seq.empty))
+    }
+  }
+
+  /** Bind an unbound name to its location (a racing bind fails). */
+  protected def bind(ident: Identifier, location: String,
+                     partCols: Seq[String]): Unit = {
+    val f = tblFile(ident)
     val out = fs(f).create(f, false)
     try out.write(s"$location\n${partCols.mkString(",")}\n"
       .getBytes("UTF-8"))
     finally out.close()
   }
 
-  private def readPointer(f: Path): (String, Seq[String]) = {
-    val in = fs(f).open(f)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val lines = txt.split("\n", -1)
-    (lines(0), if (lines.length > 1 && lines(1).nonEmpty)
-       lines(1).split(",").toSeq else Seq.empty)
+  /** Unbind a name (the data stays). */
+  protected def unbind(ident: Identifier): Boolean = {
+    val f = tblFile(ident)
+    fs(f).exists(f) && fs(f).delete(f, false)
   }
 
-  /** The registered location of a catalog table — the bridge the SQL DML
-    * front-end uses to route name-addressed statements to the same
-    * transactional front doors as the path surface. */
-  def locationOf(ident: Identifier): String = {
-    val f = tblFile(ident)
-    if (!fs(f).exists(f)) throw new NoSuchTableException(ident)
-    readPointer(f)._1
-  }
+  /** Where a CREATE / REPLACE puts the table: the declared LOCATION, the
+    * name's current binding, or a default under the metastore root. */
+  protected def locationFor(ident: Identifier,
+                            properties: util.Map[String, String]): String =
+    Option(properties.get(TableCatalog.PROP_LOCATION))
+      .orElse(pointer(ident).map(_._1))
+      .getOrElse(s"$rootDir/_data/${(ident.namespace :+ ident.name)
+        .mkString("/")}")
+
+  private def bound(ident: Identifier): (String, Seq[String]) =
+    pointer(ident).getOrElse(throw new NoSuchTableException(ident))
+
+  private def table(ident: Identifier, location: String,
+                    partCols: Seq[String], declared: StructType,
+                    asOfVersion: Option[Long] = None): TxNamedTable =
+    new TxNamedTable(catName +: ident.namespace.toSeq :+ ident.name,
+      location, partCols, declared, asOfVersion)
+
+  /** The registered location of a catalog table — the bridge the
+    * maintenance statements ([[GraftSqlParser]]) use to route
+    * name-addressed statements to the same front doors as the path
+    * surface. */
+  def locationOf(ident: Identifier): String = bound(ident)._1
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val d = nsDir(namespace)
@@ -111,17 +143,12 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
         st.getPath.getName.stripSuffix(".tbl")))
   }
 
-  override def tableExists(ident: Identifier): Boolean = {
-    val f = tblFile(ident)
-    fs(f).exists(f)
-  }
+  override def tableExists(ident: Identifier): Boolean =
+    pointer(ident).isDefined
 
   override def loadTable(ident: Identifier): Table = {
-    val f = tblFile(ident)
-    if (!fs(f).exists(f)) throw new NoSuchTableException(ident)
-    val (location, partCols) = readPointer(f)
-    new TxNamedTable(s"$catName.${(ident.namespace :+ ident.name)
-      .mkString(".")}", location, partCols, new StructType())
+    val (location, partCols) = bound(ident)
+    table(ident, location, partCols, new StructType())
   }
 
   /** `SELECT ... FROM cat.ns.t VERSION AS OF n` — Spark's native
@@ -129,41 +156,30 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
     * the version and [[graft.streaming.TxBatchReadRule]] mounts
     * readTableAt. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val f = tblFile(ident)
-    if (!fs(f).exists(f)) throw new NoSuchTableException(ident)
-    val (location, partCols) = readPointer(f)
+    val (location, partCols) = bound(ident)
     val v = try version.toLong catch { case _: NumberFormatException =>
       sys.error(s"TxCatalog: VERSION AS OF needs an integer version, " +
         s"got [$version]") }
-    new TxNamedTable(s"$catName.${(ident.namespace :+ ident.name)
-      .mkString(".")}", location, partCols, new StructType(),
-      asOfVersion = Some(v))
+    table(ident, location, partCols, new StructType(), Some(v))
   }
 
   /** `TIMESTAMP AS OF t` — Spark hands MICROseconds since epoch. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val f = tblFile(ident)
-    if (!fs(f).exists(f)) throw new NoSuchTableException(ident)
-    val (location, partCols) = readPointer(f)
+    val (location, partCols) = bound(ident)
     val v = TxLog.versionAsOf(spark, location,
       Math.floorDiv(timestamp, 1000L))
-    new TxNamedTable(s"$catName.${(ident.namespace :+ ident.name)
-      .mkString(".")}", location, partCols, new StructType(),
-      asOfVersion = Some(v))
+    table(ident, location, partCols, new StructType(), Some(v))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table = {
-    val f = tblFile(ident)
-    if (fs(f).exists(f)) throw new TableAlreadyExistsException(ident)
-    val d = nsDir(ident.namespace)
-    if (!fs(d).exists(d)) throw new NoSuchNamespaceException(ident.namespace)
+    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    if (!namespaceExists(ident.namespace))
+      throw new NoSuchNamespaceException(ident.namespace)
     // identity-transform partitioning only (the layout the log records)
     val partCols = identityCols(partitions)
-    val location = Option(properties.get(TableCatalog.PROP_LOCATION))
-      .getOrElse(s"$rootDir/_data/${(ident.namespace :+ ident.name)
-        .mkString("/")}")
+    val location = locationFor(ident, properties)
     // registering an EXISTING txlog table: its recorded partitioning is
     // authoritative — a conflicting PARTITIONED BY must refuse
     val recorded: Seq[String] =
@@ -175,7 +191,7 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
         s"match the table's recorded partitioning " +
         s"[${recorded.mkString(", ")}] at $location")
     val effective = if (recorded.nonEmpty) recorded else partCols
-    writePointer(f, location, effective)
+    bind(ident, location, effective)
     // user-declared TBLPROPERTIES (Spark reserves the bookkeeping keys)
     val userProps = userPropsOf(properties)
     if (TxLog.tableExists(spark, location)) {
@@ -197,8 +213,7 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
       "TxCatalog: TBLPROPERTIES on a brand-new table need a declared " +
         "schema + PARTITIONED BY (the properties ride the create " +
         "commit) — declare them or create the data first")
-    new TxNamedTable(s"$catName.${(ident.namespace :+ ident.name)
-      .mkString(".")}", location, effective, schema)
+    table(ident, location, effective, schema)
   }
 
   override def alterTable(ident: Identifier,
@@ -245,31 +260,26 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
         TxLog.dropColumnTx(spark, location, dc.fieldNames()(0)): Unit
       case other => sys.error(s"TxCatalog: unsupported ALTER TABLE " +
         s"change $other — ADD COLUMN, RENAME COLUMN, DROP COLUMN and " +
-        "SET/UNSET TBLPROPERTIES (plus the txlog.`path` ALTER " +
-        "statements for constraints) are supported")
+        "SET/UNSET TBLPROPERTIES (plus ADD/DROP CONSTRAINT, served by " +
+        "graft's SQL parser) are supported")
     }
     loadTable(ident)
   }
 
-  override def dropTable(ident: Identifier): Boolean = {
-    val f = tblFile(ident)
-    fs(f).exists(f) && fs(f).delete(f, false)
-  }
+  override def dropTable(ident: Identifier): Boolean = unbind(ident)
 
   /** `DROP TABLE ... PURGE` — the managed-lifecycle exit: unregister the
     * NAME first (no half-dropped binding), then reclaim the table's
     * whole location (log + data). Plain DROP keeps the external-table
     * posture (pointer only); PURGE is the caller saying the data goes
     * too. */
-  override def purgeTable(ident: Identifier): Boolean = {
-    val f = tblFile(ident)
-    if (!fs(f).exists(f)) return false
-    val (location, _) = readPointer(f)
-    fs(f).delete(f, false): Unit
-    val p = new Path(location)
-    fs(p).delete(p, true): Unit
-    true
-  }
+  override def purgeTable(ident: Identifier): Boolean =
+    pointer(ident).exists { case (location, _) =>
+      unbind(ident): Unit
+      val p = new Path(location)
+      fs(p).delete(p, true): Unit
+      true
+    }
 
   // ---- staging (atomic CTAS / REPLACE TABLE / CREATE OR REPLACE) -------
   //
@@ -310,7 +320,7 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
     // is its own transactional commit; abort unbinds the NAME
     val t = createTable(ident, schema, partitions, properties)
       .asInstanceOf[TxNamedTable]
-    new TxStagedCreateTable(t, () => { dropTable(ident): Unit })
+    new TxStagedCreateTable(t, () => { unbind(ident): Unit })
   }
 
   override def stageReplace(ident: Identifier, schema: StructType,
@@ -331,14 +341,10 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
                             partitions: Array[Transform],
                             properties: util.Map[String, String])
       : StagedTable = {
-    val d = nsDir(ident.namespace)
-    if (!fs(d).exists(d)) throw new NoSuchNamespaceException(ident.namespace)
-    val f = tblFile(ident)
+    if (!namespaceExists(ident.namespace))
+      throw new NoSuchNamespaceException(ident.namespace)
     val declared = identityCols(partitions)
-    val location = Option(properties.get(TableCatalog.PROP_LOCATION))
-      .orElse(if (fs(f).exists(f)) Some(readPointer(f)._1) else None)
-      .getOrElse(s"$rootDir/_data/${(ident.namespace :+ ident.name)
-        .mkString("/")}")
+    val location = locationFor(ident, properties)
     // one partitioning per location: REPLACE keeps the recorded layout
     // (or adopts the declared one on a fresh location)
     val recorded: Seq[String] =
@@ -354,12 +360,11 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
         s"partitioning [${recorded.mkString(", ")}] at $location — a " +
         "location has ONE partitioning; rebuild at a new location to " +
         "change it")
-    new TxStagedReplaceTable(
-      s"$catName.${(ident.namespace :+ ident.name).mkString(".")}",
+    new TxStagedReplaceTable(table(ident, location, effective, schema).name(),
       location, effective, schema, userPropsOf(properties),
       commitPointer = () => {
-        if (fs(f).exists(f)) fs(f).delete(f, false): Unit
-        writePointer(f, location, effective)
+        unbind(ident): Unit
+        bind(ident, location, effective)
       })
   }
 
@@ -424,6 +429,84 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
+/** The PATH surface as a catalog — registered as `txlog` by
+  * [[graft.Sessions.builder]], so ``txlog.`/root``` resolves through
+  * Spark's own `ResolveRelations` like `cat.ns.tbl`:
+  *
+  * {{{
+  *   SELECT * FROM txlog.`/root` [VERSION AS OF n]
+  *   INSERT INTO txlog.`/root` SELECT ...
+  *   MERGE INTO txlog.`/root` USING src ON ... / UPDATE / DELETE
+  *   ALTER TABLE txlog.`/root` ADD COLUMNS (...) | RENAME COLUMN | ...
+  *   CREATE [OR REPLACE] TABLE txlog.`/root` (cols) PARTITIONED BY (p)
+  *   CREATE TABLE txlog.`/root` PARTITIONED BY (p) AS SELECT ...
+  * }}}
+  *
+  * It is [[TxCatalog]] with the pointer replaced by the identity: the
+  * identifier IS the table root, a table exists iff its log does, and
+  * there is no name to bind, unbind, rename or list. Being a catalog
+  * name, `txlog` shadows a `spark_catalog` database called `txlog`. */
+class TxPathCatalog extends TxCatalog {
+  private def refuse(what: String): Nothing =
+    throw new UnsupportedOperationException(s"txlog path catalog: $what " +
+      "— a path table is addressed by its root, not registered by name")
+
+  override def initialize(name: String,
+                          options: CaseInsensitiveStringMap): Unit =
+    catName = name
+
+  override protected def pointer(ident: Identifier)
+      : Option[(String, Seq[String])] =
+    if (ident.namespace.isEmpty && TxLog.tableExists(spark, ident.name))
+      Some((ident.name, Seq.empty)) // TxNamedTable reads the recorded set
+    else None
+
+  override protected def bind(ident: Identifier, location: String,
+                              partCols: Seq[String]): Unit = ()
+
+  override protected def unbind(ident: Identifier): Boolean = false
+
+  override protected def locationFor(ident: Identifier,
+      properties: util.Map[String, String]): String = {
+    require(properties.get(TableCatalog.PROP_LOCATION) == null,
+      s"txlog.`${ident.name}`: a path table lives at its root — LOCATION " +
+        "is for named catalogs")
+    ident.name
+  }
+
+  /** A path table has no pointer to ride until the first write: its
+    * create commit must record the declared schema and partitioning. */
+  override def createTable(ident: Identifier, schema: StructType,
+                           partitions: Array[Transform],
+                           properties: util.Map[String, String]): Table = {
+    require(schema.nonEmpty && partitions.nonEmpty,
+      s"CREATE TABLE txlog.`${ident.name}` needs a declared column list " +
+        "(or AS <query>) and PARTITIONED BY — the create commit records " +
+        "both; to adopt existing data use CONVERT TO TXLOG")
+    super.createTable(ident, schema, partitions, properties)
+  }
+
+  override def dropTable(ident: Identifier): Boolean = refuse("DROP TABLE")
+  override def purgeTable(ident: Identifier): Boolean = refuse("DROP TABLE")
+  override def renameTable(oldIdent: Identifier,
+                           newIdent: Identifier): Unit = refuse("RENAME")
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    refuse("SHOW TABLES")
+  override def listNamespaces(): Array[Array[String]] = Array.empty
+  override def listNamespaces(namespace: Array[String])
+      : Array[Array[String]] =
+    if (namespace.isEmpty) Array.empty
+    else throw new NoSuchNamespaceException(namespace)
+  override def namespaceExists(namespace: Array[String]): Boolean =
+    namespace.isEmpty
+  override def createNamespace(namespace: Array[String],
+                               metadata: util.Map[String, String]): Unit =
+    refuse("CREATE NAMESPACE")
+  override def dropNamespace(namespace: Array[String],
+                             cascade: Boolean): Boolean =
+    refuse("DROP NAMESPACE")
+}
+
 /** A catalog-loaded table: BATCH_READ resolves through
   * [[graft.streaming.TxBatchReadRule]] to the full readTable plan
   * (mapping projection, dv anti-join, TxFileIndex pruning — identical
@@ -434,7 +517,7 @@ class TxCatalog extends TableCatalog with SupportsNamespaces
   * tombstones dropped) plus partition columns; a not-yet-written table
   * reports its declared (CTAS) schema until the first write records the
   * real one. */
-private[graft] final class TxNamedTable(tableName: String,
+private[graft] final class TxNamedTable(nameParts: Seq[String],
                                         val root: String,
                                         val partCols: Seq[String],
                                         declared: StructType,
@@ -456,12 +539,13 @@ private[graft] final class TxNamedTable(tableName: String,
     * behave identically under both addresses. (Spark requires the
     * writer's `.format("txlog")` to match the provider here.) */
   override def v1Table: org.apache.spark.sql.catalyst.catalog.CatalogTable = {
-    val parts = tableName.split('.').toSeq
+    // a path table has no namespace, and a v1 identifier names its
+    // catalog only under a database
+    val db = Some(nameParts.drop(1).dropRight(1).mkString("."))
+      .filter(_.nonEmpty)
     org.apache.spark.sql.catalyst.catalog.CatalogTable(
       identifier = org.apache.spark.sql.catalyst.TableIdentifier(
-        parts.last,
-        Some(parts.drop(1).dropRight(1).mkString(".")).filter(_.nonEmpty),
-        parts.headOption),
+        nameParts.last, db, db.flatMap(_ => nameParts.headOption)),
       tableType =
         org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
       storage = org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat
@@ -474,7 +558,8 @@ private[graft] final class TxNamedTable(tableName: String,
 
   private def spark: SparkSession = SparkSession.active
 
-  override def name(): String = tableName
+  override def name(): String = nameParts.map(p =>
+    if (p.matches("\\w+")) p else s"`${p.replace("`", "``")}`").mkString(".")
 
   override def schema(): StructType =
     if (asOfVersion.isDefined)
@@ -574,7 +659,7 @@ private[graft] final class TxNamedTable(tableName: String,
               if (TxLog.tableExists(s, root))
                 TxLog.tableMeta(s, root)._2.map(_.name).toSeq
               else {
-                require(partCols.nonEmpty, s"txlog catalog [$tableName]: " +
+                require(partCols.nonEmpty, s"txlog catalog [${name()}]: " +
                   "the first write creates the table — declare " +
                   "PARTITIONED BY at CREATE TABLE time")
                 partCols

@@ -4063,9 +4063,9 @@ object SourceQueries {
           .withColumn("c_custkey", col("c_custkey") + maxKey + 1000))
       TxLog.mergeClausesTx(s, root, src, "c_custkey",
         whenMatched = Seq(
-          TxLog.MergeClause.delete(Some("s.c_acctbal < 0")),
+          TxLog.MergeClause.delete(Some(expr("s.c_acctbal < 0"))),
           TxLog.MergeClause.update(
-            Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal"))),
+            Map("c_acctbal" -> expr("t.c_acctbal + s.c_acctbal")))),
         whenNotMatched = Seq(TxLog.MergeClause.insertAll()))
       // the rewrite touched only the key-range-overlapping files
       val h = TxLog.history(s, root).collect().maxBy(_.getLong(0))

@@ -413,10 +413,6 @@ object TxLog {
   }
 
   private def readLogEntryOnce(spark: SparkSession, root: String): LogEntry = {
-    // kill switch (A/B measurement, paranoid operators):
-    // spark.conf graft.txlog.logCache=false parses every file every read
-    val useCache =
-      spark.conf.getOption("graft.txlog.logCache").forall(_.toBoolean)
     val dir = logDir(root)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) { logCache.remove(root); return emptyLogEntry }
@@ -436,7 +432,7 @@ object TxLog {
         "TxLog.checkpoint + expireLog")
     val sig = (chkEntry.map(_._2).toSeq ++ files.map(_._2))
       .map(n => n -> statOf(n)).toMap
-    val prev = if (useCache) Option(logCache.get(root)) else None
+    val prev = Option(logCache.get(root))
     prev.filter(_.sig == sig).getOrElse {
       def fresh(n: String): Boolean =
         prev.exists(p => p.sig.get(n) == sig.get(n))
@@ -457,7 +453,7 @@ object TxLog {
       }.toVector
       if (logCache.size > LogCacheMaxRoots) logCache.clear()
       val entry = new LogEntry(sig, chkEntry.map(_._2), chk, commits)
-      if (useCache) logCache.put(root, entry)
+      logCache.put(root, entry)
       entry
     }
   }
@@ -4380,7 +4376,7 @@ object TxLog {
     * rewrite speak the widened schema. Without it a wider source refuses
     * at the candidate projection — the safe default (a typo'd source
     * column must not silently evolve the table). The SQL surface opts in
-    * per session with `graft.txlog.mergeEvolve=true`. */
+    * per statement with `MERGE WITH SCHEMA EVOLUTION INTO`. */
   private def mergeEvolve(spark: SparkSession, root: String,
                           source: DataFrame): Unit = {
     val existing = readTable(spark, root).columns.toSet
@@ -4391,23 +4387,23 @@ object TxLog {
   }
 
   /** One clause of a [[mergeClausesTx]]: conditions and SET expressions
-    * are SQL strings over the aliases `t` (target) and `s` (source) —
-    * the Delta MERGE surface shape. */
-  final case class MergeClause(kind: String, condition: Option[String],
-                               sets: Map[String, String])
+    * are Columns over the sides `t` (target) and `s` (source) —
+    * `expr("s.v > t.v")`, or `col("t.v")`-style references. */
+  final case class MergeClause(kind: String, condition: Option[Column],
+                               sets: Map[String, Column])
   object MergeClause {
     /** WHEN MATCHED [AND cond] THEN UPDATE SET col = expr, ... */
-    def update(set: Map[String, String],
-               condition: Option[String] = None): MergeClause =
+    def update(set: Map[String, Column],
+               condition: Option[Column] = None): MergeClause =
       MergeClause("update", condition, set)
     /** WHEN MATCHED [AND cond] THEN UPDATE SET * (source replaces). */
-    def updateAll(condition: Option[String] = None): MergeClause =
+    def updateAll(condition: Option[Column] = None): MergeClause =
       MergeClause("updateAll", condition, Map.empty)
     /** WHEN MATCHED [AND cond] THEN DELETE. */
-    def delete(condition: Option[String] = None): MergeClause =
+    def delete(condition: Option[Column] = None): MergeClause =
       MergeClause("delete", condition, Map.empty)
     /** WHEN NOT MATCHED [AND cond] THEN INSERT *. */
-    def insertAll(condition: Option[String] = None): MergeClause =
+    def insertAll(condition: Option[Column] = None): MergeClause =
       MergeClause("insertAll", condition, Map.empty)
   }
 
@@ -4482,8 +4478,7 @@ object TxLog {
         val matched = col(s"s.`$key`").isNotNull
         val idx = whenMatched.zipWithIndex
           .foldLeft(when(lit(false), -1)) { case (acc, (c, i)) =>
-            acc.when(matched &&
-              c.condition.map(expr).getOrElse(lit(true)), i)
+            acc.when(matched && c.condition.getOrElse(lit(true)), i)
           }.otherwise(-1)
         joined.withColumn("__mc", idx)
       }
@@ -4496,8 +4491,7 @@ object TxLog {
         whenMatched.zipWithIndex.foreach { case (cl, i) =>
           val v = cl.kind match {
             case "updateAll" => col(s"s.`$c`")
-            case "update" => cl.sets.get(c).map(expr)
-              .getOrElse(col(s"t.`$c`"))
+            case "update" => cl.sets.getOrElse(c, col(s"t.`$c`"))
             case "delete" => col(s"t.`$c`") // rows filtered; value unused
           }
           e = if (e == null) when(col("__mc") === i, v)
@@ -4520,7 +4514,7 @@ object TxLog {
       val inserts = whenNotMatched.headOption.map { _ =>
         val s0 = notMatched.alias("s")
         val pass = whenNotMatched
-          .map(_.condition.map(expr).getOrElse(lit(true)))
+          .map(_.condition.getOrElse(lit(true)))
           .reduce(_ || _)
         s0.filter(pass).select(tableCols.map(c => col(s"s.`$c`")): _*)
       }

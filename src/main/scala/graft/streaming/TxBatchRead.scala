@@ -32,15 +32,6 @@ import graft.sources.TxLog
   * extensions never reaches a bare scan: the table's `toBatch` refuses
   * loudly ([[TxStreamTable]]). */
 case class TxBatchReadRule(session: SparkSession) extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
-  import org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement
-
-  // the second part must LOOK LIKE A PATH (contain '/'): a catalog
-  // database that happens to be named "txlog" keeps resolving through
-  // the catalog — this rule only claims txlog.`/path/to/root`
-  private def isTx(parts: Seq[String]): Boolean =
-    parts.length == 2 && parts.head.equalsIgnoreCase("txlog") &&
-      parts(1).contains("/")
 
   // table_changes first argument: a string literal naming a txlog PATH —
   // 'txlog.`/root`' (the read-surface spelling), a bare '/root' — or a
@@ -98,128 +89,74 @@ case class TxBatchReadRule(session: SparkSession) extends Rule[LogicalPlan] {
       StructField("_commit_version", LongType, false)))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveOperatorsUp {
-      // SQL read surface: SELECT ... FROM txlog.`/root` — the
-      // two-part identifier resolves to the same readTable plan the
-      // format string serves (Delta's delta.`/path` move)
-      case u: UnresolvedRelation
-          if isTx(u.multipartIdentifier) && !u.isStreaming =>
-        TxLog.readTable(session, u.multipartIdentifier(1))
+  // SELECT ... FROM table_changes('txlog.`/root`', from [, to]) —
+  // the SQL form of the batch change feed (Delta's table_changes
+  // TVF): audits are writable in pure SQL, same readChangeFeed
+  // window semantics as the options form (an empty window is an
+  // empty frame with the feed schema). Registered as a table function
+  // by [[graft.plans.GraftExtensions]].
+  //
+  // ==== DIVERGENCE FROM DELTA — READ THIS BEFORE PORTING SQL ====
+  // This TVF adopts Delta's NAME but graft's engine-wide window
+  // convention: `from` is an EXCLUSIVE BASELINE ("the version you
+  // already have"), so table_changes(t, 2, 4) reads the (2, 4]
+  // window — versions 3 and 4. Delta's table_changes(t, 2, 4)
+  // INCLUDES version 2. The exclusive baseline is uniform across
+  // every graft surface (streaming offsets ARE baselines, the
+  // options-form startingVersion, this TVF) — one convention, so
+  // the three spellings of the same feed always agree with each
+  // other; Delta SQL ported verbatim must pass `from - 1`. Also
+  // documented in README ("Change feed windows").
+  def tableChanges(args: Seq[org.apache.spark.sql.catalyst.expressions
+      .Expression]): LogicalPlan = {
+    val root = tvfRoot(args).getOrElse(sys.error("table_changes: the " +
+      "first argument names a txlog table — 'txlog.`/root`', '/root' " +
+      s"or 'cat.ns.tbl'; got ${args.headOption.map(_.sql).orNull}"))
+    require(args.length == 2 || args.length == 3,
+      "table_changes: (table, startingVersion[, endingVersion]) — " +
+        s"got ${args.length} arguments")
+    val since = tvfVersion(args(1), "startingVersion")
+    val until = args.lift(2).map(tvfVersion(_, "endingVersion"))
+    TxLog.readChangeFeed(session, root, since, until)._1
+      .map { df =>
+        // serve the SAME column ORDER as the options-form CDF read
+        // (data, partition, change columns) — one feed, two
+        // spellings. Names come from the FEED itself: a CAPPED
+        // window re-maps through the mapping AS OF the cap (its
+        // deterministic-replay contract), so the current-mapping
+        // names may not exist in it
+        val partNames = TxLog.tableMeta(session, root)._2
+          .map(_.name).toSet
+        val change = Seq("_change_type", "_commit_version")
+        val dataCols = df.columns.toSeq.filterNot(c =>
+          change.contains(c) || partNames.contains(c))
+        val ordered = dataCols ++
+          df.columns.toSeq.filter(partNames.contains) ++ change
+        df.select(ordered.map(org.apache.spark.sql.functions.col): _*)
           .queryExecution.analyzed
+      }
+      .getOrElse {
+        session.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          cdfSchema(root, until)).queryExecution.analyzed
+      }
+  }
 
-      // SELECT ... FROM table_changes('txlog.`/root`', from [, to]) —
-      // the SQL form of the batch change feed (Delta's table_changes
-      // TVF): audits are writable in pure SQL, same readChangeFeed
-      // window semantics as the options form (an empty window is an
-      // empty frame with the feed schema). Claimed only for a PATH
-      // first argument — any other table_changes delegates to Spark.
-      //
-      // ==== DIVERGENCE FROM DELTA — READ THIS BEFORE PORTING SQL ====
-      // This TVF adopts Delta's NAME but graft's engine-wide window
-      // convention: `from` is an EXCLUSIVE BASELINE ("the version you
-      // already have"), so table_changes(t, 2, 4) reads the (2, 4]
-      // window — versions 3 and 4. Delta's table_changes(t, 2, 4)
-      // INCLUDES version 2. The exclusive baseline is uniform across
-      // every graft surface (streaming offsets ARE baselines, the
-      // options-form startingVersion, this TVF) — one convention, so
-      // the three spellings of the same feed always agree with each
-      // other; Delta SQL ported verbatim must pass `from - 1`. Also
-      // documented in README ("Change feed windows").
-      case tvf: org.apache.spark.sql.catalyst.analysis
-          .UnresolvedTableValuedFunction
-          if tvf.name.length == 1 &&
-            tvf.name.head.equalsIgnoreCase("table_changes") &&
-            tvfRoot(tvf.functionArgs).isDefined =>
-        val root = tvfRoot(tvf.functionArgs).get
-        require(tvf.functionArgs.length == 2 || tvf.functionArgs.length == 3,
-          "table_changes: (table, startingVersion[, endingVersion]) — " +
-            s"got ${tvf.functionArgs.length} arguments")
-        val since = tvfVersion(tvf.functionArgs(1), "startingVersion")
-        val until =
-          if (tvf.functionArgs.length == 3)
-            Some(tvfVersion(tvf.functionArgs(2), "endingVersion"))
-          else None
-        TxLog.readChangeFeed(session, root, since, until)._1
-          .map { df =>
-            // serve the SAME column ORDER as the options-form CDF read
-            // (data, partition, change columns) — one feed, two
-            // spellings. Names come from the FEED itself: a CAPPED
-            // window re-maps through the mapping AS OF the cap (its
-            // deterministic-replay contract), so the current-mapping
-            // names may not exist in it
-            val partNames = TxLog.tableMeta(session, root)._2
-              .map(_.name).toSet
-            val change = Seq("_change_type", "_commit_version")
-            val dataCols = df.columns.toSeq.filterNot(c =>
-              change.contains(c) || partNames.contains(c))
-            val ordered = dataCols ++
-              df.columns.toSeq.filter(partNames.contains) ++ change
-            df.select(ordered.map(org.apache.spark.sql.functions.col): _*)
-              .queryExecution.analyzed
-          }
-          .getOrElse {
-            session.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              cdfSchema(root, until)).queryExecution.analyzed
-          }
+  // a MERGE / UPDATE / DELETE TARGET stays the catalog relation:
+  // [[graft.plans.TxDmlRule]] maps the resolved command onto the front
+  // doors by table; only a MERGE source is a read
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
+        if graft.plans.TxDmlRule.rootOf(m.targetTable).isDefined =>
+      m.copy(sourceTable = rewrite(m.sourceTable))
+    case c @ (_: org.apache.spark.sql.catalyst.plans.logical.UpdateTable |
+              _: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable)
+        if graft.plans.TxDmlRule.rootOf(c.children.head).isDefined => c
+    case _ => rewrite(plan)
+  }
 
-      // SELECT ... FROM txlog.`/root` VERSION AS OF n | TIMESTAMP AS OF t
-      case RelationTimeTravel(u: UnresolvedRelation, ts, ver)
-          if isTx(u.multipartIdentifier) =>
-        val root = u.multipartIdentifier(1)
-        val version = ver.map(_.toLong).getOrElse {
-          val e = ts.getOrElse(sys.error(
-            "txlog time travel: VERSION AS OF or TIMESTAMP AS OF required"))
-          // the expression arrives UNRESOLVED (this rule also runs at
-          // parse time) — resolve and evaluate it through a one-row plan
-          val row = org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(
-            session, Project(
-              Seq(Alias(org.apache.spark.sql.catalyst.expressions.Cast(
-                e, org.apache.spark.sql.types.TimestampType,
-                Some(session.sessionState.conf.sessionLocalTimeZone)),
-                "ts")()),
-              org.apache.spark.sql.catalyst.plans.logical.OneRowRelation()))
-            .head()
-          require(!row.isNullAt(0),
-            s"txlog time travel: TIMESTAMP AS OF [$e] is not a timestamp")
-          TxLog.versionAsOf(session, root, row.getTimestamp(0).getTime)
-        }
-        TxLog.readTableAt(session, root, version).queryExecution.analyzed
-
-      // INSERT INTO txlog.`/root` SELECT ... — a transactional append
-      // under the table's RECORDED partitioning (INSERT OVERWRITE is a
-      // full partition overwrite of the partitions the query produces)
-      // matched at PARSE time (GraftSqlParser runs this rule on every
-      // delegate-parsed plan — Spark's ResolveSQLOnFile would otherwise
-      // refuse the txlog identifier before extension rules run), so the
-      // query subtree is typically unresolved here; the command analyzes
-      // it at run time (ofRows)
-      case InsertIntoStatement(u: UnresolvedRelation, partitionSpec,
-          userCols, query, overwrite, _, _)
-          if isTx(u.multipartIdentifier) =>
-        val root = u.multipartIdentifier(1)
-        require(partitionSpec.isEmpty && userCols.isEmpty,
-          "txlog INSERT: static PARTITION specs and column lists are " +
-            "not supported — the table's recorded partitioning routes " +
-            "rows; write all columns")
-        graft.plans.TxSqlCommand(
-          Seq(org.apache.spark.sql.catalyst.expressions
-            .AttributeReference("version",
-              org.apache.spark.sql.types.LongType, nullable = false)()),
-          s => {
-            val df = org.apache.spark.sql.graftbridge.DatasetBridge
-              .ofRows(s, query)
-            val partCols = TxLog.tableMeta(s, root)._2.map(_.name).toSeq
-            val v =
-              if (overwrite)
-                TxLog.overwritePartitionsTx(df, root, partCols)
-              else TxLog.commit(s, root,
-                TxLog.stage(df, root, partCols, Nil, 0), "append",
-                readVersion = 0L)
-            Seq(org.apache.spark.sql.Row(v))
-          })
-
+  private def rewrite(plan: LogicalPlan): LogicalPlan =
+    plan.resolveOperatorsUp {
       case r: DataSourceV2Relation if r.table.isInstanceOf[TxStreamTable] =>
         def opt(k: String): Option[String] = Option(r.options.get(k))
         val root = opt("path").getOrElse(

@@ -46,4 +46,13 @@ class BenchGuardSpec extends AnyFunSuite {
     // silently disable a query's retry)
     assert(Bench.baselineSec.keySet.subsetOf(Bench.headline.toSet))
   }
+
+  test("README states the registered-query count") {
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    try assert(readme.mkString.contains(
+      s": ${SparkEntry.queries.size} named queries"),
+      s"README.md's layout table must state ${SparkEntry.queries.size} " +
+        "named queries")
+    finally readme.close()
+  }
 }

@@ -101,7 +101,8 @@ class TxBatchReadSpec extends SparkSpecBase {
   }
 
   test("table_changes TVF serves the same window as the options form; " +
-      "an empty window is an empty frame; non-path TVFs delegate") {
+      "an empty window is an empty frame; a non-txlog table is a loud " +
+      "error") {
     val root = freshRoot("tvf")
     import spark.implicits._
     TxLog.appendBatchTx(
@@ -132,11 +133,13 @@ class TxBatchReadSpec extends SparkSpecBase {
     assert(empty.isEmpty)
     assert(empty.columns.contains("_change_type") &&
       empty.columns.contains("_commit_version"))
-    // a non-path table_changes is NOT ours — Spark owns the error
-    val e = intercept[Exception] {
+    // table_changes is graft's registered table function: a first
+    // argument naming no txlog table refuses, naming the spellings
+    val e = intercept[RuntimeException] {
       spark.sql("SELECT * FROM table_changes('not_a_path', 1)")
     }
-    assert(!e.getMessage.contains("txlog"), e.getMessage)
+    assert(e.getMessage.contains("the first argument names a txlog " +
+      "table"), e.getMessage)
   }
 
   test("a CAPPED change-feed window replays the column mapping AS OF " +

@@ -1737,16 +1737,16 @@ class TxLogSpec extends SparkSpecBase {
       ("a", 6L, -6.0)).toDF("part", "k", "v")
     TxLog.mergeClausesTx(spark, root, src, "k",
       whenMatched = Seq(
-        TxLog.MergeClause.delete(Some("s.v < 0")),
-        TxLog.MergeClause.update(Map("v" -> "t.v + s.v"))),
-      whenNotMatched = Seq(TxLog.MergeClause.insertAll(Some("s.v > 0"))))
+        TxLog.MergeClause.delete(Some(expr("s.v < 0"))),
+        TxLog.MergeClause.update(Map("v" -> expr("t.v + s.v")))),
+      whenNotMatched = Seq(TxLog.MergeClause.insertAll(Some(expr("s.v > 0")))))
     val got = TxLog.read(spark, root, "part")
       .collect().map(r => r.getAs[Long]("k") -> r.getAs[Double]("v")).toMap
     assert(got === Map(2L -> 25.0, 3L -> 30.0, 5L -> 50.0, 9L -> 90.0))
     // SET on a partition column refuses
     intercept[IllegalArgumentException] {
       TxLog.mergeClausesTx(spark, root, src, "k",
-        whenMatched = Seq(TxLog.MergeClause.update(Map("part" -> "'c'"))))
+        whenMatched = Seq(TxLog.MergeClause.update(Map("part" -> lit("c")))))
     }
     // a non-final unconditional clause refuses (dead clauses)
     intercept[IllegalArgumentException] {
@@ -1760,8 +1760,8 @@ class TxLogSpec extends SparkSpecBase {
     val vBefore = TxLog.snapshot(spark, root).version
     TxLog.mergeClausesTx(spark, root, src2, "k",
       whenMatched = Seq(
-        TxLog.MergeClause.delete(Some("s.v < 0")),
-        TxLog.MergeClause.update(Map("v" -> "t.v + s.v"))),
+        TxLog.MergeClause.delete(Some(expr("s.v < 0"))),
+        TxLog.MergeClause.update(Map("v" -> expr("t.v + s.v")))),
       changeFeed = true)
     val (feed, _) = TxLog.readChangeFeed(spark, root, vBefore)
     val classes = feed.get.groupBy("_change_type").count().collect()

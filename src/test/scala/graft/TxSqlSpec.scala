@@ -44,12 +44,11 @@ class TxSqlSpec extends SparkSpecBase {
          |WHEN MATCHED THEN UPDATE SET *""".stripMargin)
     assert(TxLog.readTable(spark, root).filter(col("k") === 4L)
       .head.getAs[Double]("v") === 80.0)
-    // a wrong alias refuses loudly (clause expressions bind against t/s)
-    val err = intercept[IllegalArgumentException] {
-      spark.sql(s"MERGE INTO txlog.`$root` tgt USING mrg_src s " +
-        "ON tgt.k = s.k WHEN MATCHED THEN DELETE")
-    }
-    assert(err.getMessage.contains("alias must be"), err.getMessage)
+    // any alias binds: clause expressions are re-bound by column name
+    spark.sql(s"MERGE INTO txlog.`$root` tgt USING mrg_src src " +
+      "ON tgt.k = src.k WHEN MATCHED AND src.k = 4 THEN DELETE")
+    assert(TxLog.readTable(spark, root).select("k").collect()
+      .map(_.getLong(0)).toSet === Set(1L, 3L))
   }
 
   test("UPDATE ... SET ... WHERE and DELETE FROM ... WHERE") {
@@ -122,10 +121,11 @@ class TxSqlSpec extends SparkSpecBase {
     assert(spark.sql(s"SELECT * FROM txlog.`$root` TIMESTAMP AS OF " +
       s"timestamp_millis(${t1}L)").count() === 2L)
     // INSERT INTO appends transactionally under the recorded partitioning
-    val v = spark.sql(
-      s"INSERT INTO txlog.`$root` SELECT 'c' AS part, 3L AS k, " +
-        "CAST(30.0 AS DOUBLE) AS amount").head.getLong(0)
-    assert(v === 4L)
+    // (Spark's INSERT: positional unless BY NAME)
+    spark.sql(
+      s"INSERT INTO txlog.`$root` BY NAME SELECT 'c' AS part, 3L AS k, " +
+        "CAST(30.0 AS DOUBLE) AS amount")
+    assert(TxLog.currentVersion(spark, root) === 4L)
     assert(spark.sql(s"SELECT SUM(amount) FROM txlog.`$root`")
       .head.getDouble(0) === 50.0)
   }
@@ -266,12 +266,20 @@ class TxSqlSpec extends SparkSpecBase {
     assert(spark.sql("SELECT 1 AS one").head.getInt(0) === 1)
     Seq((1, "x")).toDF("id", "s").createOrReplaceTempView("plain_view")
     assert(spark.sql("SELECT COUNT(*) FROM plain_view").head.getLong(0) === 1L)
-    // a txlog statement with a syntax hole gets OUR error, not a
-    // confusing delegate parse of `txlog` as an identifier
-    val err = intercept[IllegalArgumentException] {
+    // malformed DML on a txlog table is Spark's own parse error
+    val err = intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
       spark.sql("DELETE FRM txlog.`/tmp/nope`")
     }
-    assert(err.getMessage.contains("txlog SQL"), err.getMessage)
+    assert(err.getMessage.contains("PARSE_SYNTAX_ERROR"), err.getMessage)
+    // a malformed statement on one of graft's own verbs is OUR error
+    val root = freshRoot("malformed")
+    TxLog.appendBatchTx(Seq(("a", 1L)).toDF("part", "k"), root, "part",
+      "mf-b1")
+    val own = intercept[IllegalArgumentException] {
+      spark.sql(s"OPTIMIZE txlog.`$root` SMALLFILES lots")
+    }
+    assert(own.getMessage.contains("txlog SQL: SMALLFILES needs a byte " +
+      "count"), own.getMessage)
   }
 
   test("the claim pre-filter is TARGET-position based: a txlog ref in a " +
@@ -284,19 +292,27 @@ class TxSqlSpec extends SparkSpecBase {
       spark.sql("MERGE INTO claim_tgt t USING (SELECT * FROM " +
         "txlog.`/tmp/none`) s ON t.k = s.k WHEN MATCHED THEN DELETE")
     }
-    assert(!e1.getMessage.contains("txlog SQL"), e1.getMessage)
+    assert(!e1.getMessage.contains("txlog SQL:"), e1.getMessage)
     // an UPDATE whose STRING LITERAL mentions txlog.`…` delegates too
     val e2 = intercept[Exception] {
       spark.sql("UPDATE claim_tgt SET s = 'see txlog.`/tmp/none`'")
     }
-    assert(!e2.getMessage.contains("txlog SQL"), e2.getMessage)
-    // an unbalanced '(' in a claimed statement fails LOUDLY instead of
-    // spinning forever past the end of the token stream
-    val e3 = intercept[IllegalArgumentException] {
+    assert(!e2.getMessage.contains("txlog SQL:"), e2.getMessage)
+    // an unbalanced '(' in MERGE is Spark's parse error
+    val e3 = intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
       spark.sql("MERGE INTO txlog.`/tmp/none` t USING (SELECT 1 AS k " +
         "s ON t.k = s.k WHEN MATCHED THEN DELETE")
     }
-    assert(e3.getMessage.contains("unbalanced '('"), e3.getMessage)
+    assert(e3.getMessage.contains("PARSE_SYNTAX_ERROR"), e3.getMessage)
+    // ... and in a claimed statement it fails LOUDLY instead of spinning
+    // forever past the end of the token stream
+    val root = freshRoot("claim")
+    TxLog.appendBatchTx(Seq(("a", 1L)).toDF("part", "k"), root, "part",
+      "cl-b1")
+    val e4 = intercept[IllegalArgumentException] {
+      spark.sql(s"ALTER TABLE txlog.`$root` ADD CONSTRAINT c CHECK (k > 0")
+    }
+    assert(e4.getMessage.contains("unbalanced '('"), e4.getMessage)
   }
 
   test("ALTER TABLE: RENAME COLUMN / DROP COLUMN / ADD CONSTRAINT CHECK " +
@@ -349,16 +365,16 @@ class TxSqlSpec extends SparkSpecBase {
     assert(TxLog.currentVersion(spark, root) === vBefore + 1)
     val cols2 = TxLog.readTable(spark, root).columns.toSeq
     assert(cols2.contains("tag") && cols2.contains("weights"))
-    // missing type is OUR loud error
-    val mt = intercept[IllegalArgumentException] {
+    // a missing type and a malformed ALTER are Spark's parse errors;
+    // non-txlog ALTER delegates
+    val mt = intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
       spark.sql(s"ALTER TABLE txlog.`$root` ADD COLUMN naked")
     }
-    assert(mt.getMessage.contains("missing data type"), mt.getMessage)
-    // malformed ALTER is OUR loud error; non-txlog ALTER delegates
-    val m = intercept[IllegalArgumentException] {
+    assert(mt.getMessage.contains("PARSE_SYNTAX_ERROR"), mt.getMessage)
+    val m = intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
       spark.sql(s"ALTER TABLE txlog.`$root` FROB COLUMN k")
     }
-    assert(m.getMessage.contains("txlog SQL"), m.getMessage)
+    assert(m.getMessage.contains("PARSE_SYNTAX_ERROR"), m.getMessage)
     val d = intercept[Exception] {
       spark.sql("ALTER TABLE not_a_real_table RENAME COLUMN a TO b")
     }
@@ -407,7 +423,7 @@ class TxSqlSpec extends SparkSpecBase {
     // keys: quoted, dotted-unquoted and bare; values: quoted and bare
     spark.sql(s"ALTER TABLE txlog.`$root` SET TBLPROPERTIES (" +
       "'team.owner' = 'data-eng', graft.vacuum.retentionMs = '0', " +
-      "tier = gold)")                                                // v2
+      "tier = 'gold')")                                              // v2
     assert(TxLog.tableProperties(spark, root) === Map(
       "team.owner" -> "data-eng", "graft.vacuum.retentionMs" -> "0",
       "tier" -> "gold"))
@@ -430,11 +446,10 @@ class TxSqlSpec extends SparkSpecBase {
       "schema is the first commit; IF NOT EXISTS is a no-op") {
     val root = freshRoot("createtbl")
     import spark.implicits._
-    val v1 = spark.sql(s"CREATE TABLE txlog.`$root` " +
+    spark.sql(s"CREATE TABLE txlog.`$root` " +
       "(k BIGINT, v DOUBLE, part STRING) USING txlog " +
       "PARTITIONED BY (part) TBLPROPERTIES ('tier' = 'gold')")
-      .head.getLong(0)
-    assert(v1 === 1L)
+    assert(TxLog.currentVersion(spark, root) === 1L)
     // the EMPTY table reads: zero rows, the declared columns
     val empty = spark.sql(s"SELECT * FROM txlog.`$root`")
     assert(empty.count() === 0L)
@@ -443,8 +458,9 @@ class TxSqlSpec extends SparkSpecBase {
     assert(TxLog.tableProperties(spark, root) === Map("tier" -> "gold"))
     spark.sql(s"ALTER TABLE txlog.`$root` ADD COLUMN note STRING")  // v2
     // IF NOT EXISTS on an existing table: no-op, current version
-    assert(spark.sql(s"CREATE TABLE IF NOT EXISTS txlog.`$root` " +
-      "(x INT, part STRING) PARTITIONED BY (part)").head.getLong(0) === 2L)
+    spark.sql(s"CREATE TABLE IF NOT EXISTS txlog.`$root` " +
+      "(x INT, part STRING) PARTITIONED BY (part)")
+    assert(TxLog.currentVersion(spark, root) === 2L)
     // bare CREATE on an existing table refuses loudly
     val e = intercept[Exception] {
       spark.sql(s"CREATE TABLE txlog.`$root` (x INT, part STRING) " +
@@ -477,26 +493,28 @@ class TxSqlSpec extends SparkSpecBase {
     Seq((1L, "a"), (2L, "b")).toDF("k", "part")
       .createOrReplaceTempView("pc_src")
     // path CTAS: the create commit (v1) + the data commit (v2)
-    assert(spark.sql(s"CREATE TABLE txlog.`$root` USING txlog " +
+    spark.sql(s"CREATE TABLE txlog.`$root` USING txlog " +
       "PARTITIONED BY (part) AS SELECT k, part FROM pc_src")
-      .head.getLong(0) === 2L)
+    assert(TxLog.currentVersion(spark, root) === 2L)
     assert(spark.sql(s"SELECT COUNT(*) FROM txlog.`$root`")
       .head.getLong(0) === 2L)
     // IF NOT EXISTS CTAS on an existing table: no-op, current version
-    assert(spark.sql(s"CREATE TABLE IF NOT EXISTS txlog.`$root` " +
+    spark.sql(s"CREATE TABLE IF NOT EXISTS txlog.`$root` " +
       "PARTITIONED BY (part) AS SELECT k, part FROM pc_src")
-      .head.getLong(0) === 2L)
+    assert(TxLog.currentVersion(spark, root) === 2L)
     // CREATE OR REPLACE ... AS: ONE whole-table-state commit (new
     // schema, new rows, new properties; old rows must not merge)
-    assert(spark.sql(s"CREATE OR REPLACE TABLE txlog.`$root` " +
+    spark.sql(s"CREATE OR REPLACE TABLE txlog.`$root` " +
       "PARTITIONED BY (part) TBLPROPERTIES ('tier' = 'new') " +
-      "AS SELECT 'z' AS part, 'n1' AS label").head.getLong(0) === 3L)
+      "AS SELECT 'z' AS part, 'n1' AS label")
+    assert(TxLog.currentVersion(spark, root) === 3L)
     val now = spark.sql(s"SELECT * FROM txlog.`$root`")
     assert(now.columns.toSet === Set("part", "label") && now.count() === 1L)
     assert(TxLog.tableProperties(spark, root) === Map("tier" -> "new"))
     // bare REPLACE with declared columns: declared-schema-only
-    assert(spark.sql(s"REPLACE TABLE txlog.`$root` (x BIGINT, " +
-      "part STRING) PARTITIONED BY (part)").head.getLong(0) === 4L)
+    spark.sql(s"REPLACE TABLE txlog.`$root` (x BIGINT, " +
+      "part STRING) PARTITIONED BY (part)")
+    assert(TxLog.currentVersion(spark, root) === 4L)
     val t = spark.sql(s"SELECT * FROM txlog.`$root`")
     assert(t.count() === 0L && t.columns.toSet === Set("x", "part"))
     // bare REPLACE of a missing table refuses; columns+AS refuses
@@ -504,12 +522,12 @@ class TxSqlSpec extends SparkSpecBase {
       spark.sql(s"REPLACE TABLE txlog.`${freshRoot("pathctas-nope")}` " +
         "(x BIGINT, part STRING) PARTITIONED BY (part)")
     }
-    assert(e.getMessage.contains("no table"), e.getMessage)
+    assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), e.getMessage)
     val e2 = intercept[Exception] {
       spark.sql(s"CREATE TABLE txlog.`${freshRoot("pathctas-both")}` " +
         "(x BIGINT, part STRING) PARTITIONED BY (part) AS SELECT 1")
     }
-    assert(e2.getMessage.contains("declare a column list OR"),
+    assert(e2.getMessage.contains("Schema may not be specified"),
       e2.getMessage)
   }
 
@@ -536,23 +554,23 @@ class TxSqlSpec extends SparkSpecBase {
           r.getAs[String]("tier"))).toSeq ===
       Seq((1L, 10.0, null), (2L, 25.0, "gold"), (3L, 30.0, "silver")),
       "unmatched rows NULL-backfill the evolved column")
-    // the SQL surface opts in per session (graft.txlog.mergeEvolve)
+    // the SQL surface opts in per statement (MERGE WITH SCHEMA EVOLUTION)
     Seq(("a", 1L, 11.0, "gold", "n1")).toDF("part", "k", "v", "tier",
       "note").createOrReplaceTempView("me_src")
-    val noEvolve = intercept[Exception] {
+    val vNoEvolve = TxLog.currentVersion(spark, root)
+    val noEvolve = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql(s"MERGE INTO txlog.`$root` t USING me_src s ON t.k = s.k " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
     }
-    assert(noEvolve != null)
-    spark.conf.set("graft.txlog.mergeEvolve", "true")
-    try {
-      spark.sql(s"MERGE INTO txlog.`$root` t USING me_src s ON t.k = s.k " +
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-      val t2 = TxLog.readTable(spark, root)
-      assert(t2.columns.toSet === Set("part", "k", "v", "tier", "note"))
-      assert(t2.filter(col("k") === 1L).head.getAs[String]("note") === "n1")
-      assert(t2.filter(col("k") === 3L).head.getAs[String]("note") === null)
-    } finally spark.conf.unset("graft.txlog.mergeEvolve")
+    assert(noEvolve.getMessage.contains("note"), noEvolve.getMessage)
+    assert(TxLog.currentVersion(spark, root) === vNoEvolve)
+    spark.sql(s"MERGE WITH SCHEMA EVOLUTION INTO txlog.`$root` t " +
+      "USING me_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    val t2 = TxLog.readTable(spark, root)
+    assert(t2.columns.toSet === Set("part", "k", "v", "tier", "note"))
+    assert(t2.filter(col("k") === 1L).head.getAs[String]("note") === "n1")
+    assert(t2.filter(col("k") === 3L).head.getAs[String]("note") === null)
   }
 
   test("RESTORE TABLE ... TO TIMESTAMP AS OF: wall-clock keyed restore") {
@@ -635,5 +653,145 @@ class TxSqlSpec extends SparkSpecBase {
         .head.getLong(0) === dry2)
       assert(TxLog.readTable(spark, root).count() === 1L)
     } finally spark.conf.unset("graft.txlog.chkParquetMin")
+  }
+
+  // ---- one statement, both addresses: txlog.`root` and a catalog name --
+
+  private lazy val sqlcat: Unit = {
+    spark.conf.set("spark.sql.catalog.sqlcat", "graft.plans.TxCatalog")
+    spark.conf.set("spark.sql.catalog.sqlcat.root", freshRoot("sqlcat-meta"))
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS sqlcat.ns")
+  }
+
+  /** Runs `body(tableName, root)` once on the path surface and once on a
+    * [[graft.plans.TxCatalog]] name, each over a fresh (part, k, v) table
+    * holding k = 1, 2 (part a) and 3 (part b). */
+  private def onBothSurfaces(tag: String)(body: (String, String) => Unit)
+      : Unit = {
+    sqlcat
+    import spark.implicits._
+    Seq("path", "name").foreach { surface =>
+      val root = freshRoot(s"$tag-$surface")
+      TxLog.appendBatchTx(Seq(("a", 1L, 10.0), ("a", 2L, 20.0),
+        ("b", 3L, 30.0)).toDF("part", "k", "v"), root, "part", s"$tag-b1")
+      val name =
+        if (surface == "path") s"txlog.`$root`"
+        else {
+          spark.sql(s"DROP TABLE IF EXISTS sqlcat.ns.$tag")
+          spark.sql(s"CREATE TABLE sqlcat.ns.$tag USING txlog " +
+            s"LOCATION '$root'")
+          s"sqlcat.ns.$tag"
+        }
+      withClue(s"[$surface] ") { body(name, root) }
+    }
+  }
+
+  private def kv(root: String): Map[Long, Double] =
+    TxLog.readTable(spark, root).select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("MERGE binds any alias, or none, and a USING (SELECT ...) source, " +
+      "on both the path surface and a catalog name") {
+    import spark.implicits._
+    Seq(("a", 1L, 15.0), ("c", 4L, 40.0)).toDF("part", "k", "v")
+      .createOrReplaceTempView("aa_src")
+    onBothSurfaces("anyalias") { (t, root) =>
+      spark.sql(s"MERGE INTO $t AS tgt USING aa_src AS src " +
+        "ON tgt.k = src.k WHEN MATCHED AND src.v > tgt.v THEN UPDATE " +
+        "SET v = src.v WHEN NOT MATCHED THEN INSERT *")
+      assert(kv(root) === Map(1L -> 15.0, 2L -> 20.0, 3L -> 30.0,
+        4L -> 40.0))
+      // no aliases: the table's own name qualifies its columns
+      spark.sql(s"MERGE INTO $t USING aa_src ON $t.k = aa_src.k " +
+        s"WHEN MATCHED THEN UPDATE SET v = $t.v + aa_src.v")
+      assert(kv(root) === Map(1L -> 30.0, 2L -> 20.0, 3L -> 30.0,
+        4L -> 80.0))
+      // a subquery source under its own alias
+      spark.sql(s"MERGE INTO $t tgt USING (SELECT part, k, v FROM aa_src " +
+        "WHERE k = 4) x ON tgt.k = x.k WHEN MATCHED THEN DELETE")
+      assert(kv(root) === Map(1L -> 30.0, 2L -> 20.0, 3L -> 30.0))
+    }
+  }
+
+  test("UPDATE / DELETE with an IN (SELECT ...) predicate on both " +
+      "surfaces; a correlated subquery refuses before any commit") {
+    import spark.implicits._
+    Seq(2L, 3L).toDF("k").createOrReplaceTempView("in_keys")
+    onBothSurfaces("insub") { (t, root) =>
+      spark.sql(s"UPDATE $t SET v = v + 1 WHERE k IN (SELECT k FROM in_keys)")
+      assert(kv(root) === Map(1L -> 10.0, 2L -> 21.0, 3L -> 31.0))
+      spark.sql(s"DELETE FROM $t WHERE k IN " +
+        "(SELECT k FROM in_keys WHERE k > 2)")
+      assert(kv(root) === Map(1L -> 10.0, 2L -> 21.0))
+      val v0 = TxLog.currentVersion(spark, root)
+      val e = intercept[IllegalArgumentException] {
+        spark.sql(s"DELETE FROM $t x WHERE EXISTS " +
+          "(SELECT 1 FROM in_keys i WHERE i.k = x.k)")
+      }
+      assert(e.getMessage.contains("correlated subqueries"), e.getMessage)
+      assert(TxLog.currentVersion(spark, root) === v0)
+    }
+  }
+
+  test("a two-column or non-equi ON, a SET on a partition column and a " +
+      "non-* INSERT refuse on both surfaces with no new version") {
+    import spark.implicits._
+    Seq(("a", 1L, 99.0)).toDF("part", "k", "v")
+      .createOrReplaceTempView("rf_src")
+    onBothSurfaces("refuse") { (t, root) =>
+      val versions = spark.sql(s"DESCRIBE HISTORY $t").count()
+      def refused(stmt: String, msg: String): Unit = {
+        val e = intercept[IllegalArgumentException](spark.sql(stmt))
+        assert(e.getMessage.contains(msg), e.getMessage)
+        assert(spark.sql(s"DESCRIBE HISTORY $t").count() === versions)
+      }
+      refused(s"MERGE INTO $t tgt USING rf_src s ON tgt.k = s.k AND " +
+        "tgt.part = s.part WHEN MATCHED THEN DELETE", "single equi-key")
+      refused(s"MERGE INTO $t tgt USING rf_src s ON tgt.k < s.k " +
+        "WHEN MATCHED THEN DELETE", "single equi-key")
+      refused(s"MERGE INTO $t tgt USING rf_src s ON tgt.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET part = 'z'", "partition column")
+      refused(s"UPDATE $t SET part = 'z' WHERE k = 1", "partition column")
+      refused(s"MERGE INTO $t tgt USING rf_src s ON tgt.k = s.k " +
+        "WHEN NOT MATCHED THEN INSERT (part, k, v) VALUES (s.part, s.k, 0.0)",
+        "INSERT * only")
+      assert(kv(root) === Map(1L -> 10.0, 2L -> 20.0, 3L -> 30.0))
+    }
+  }
+
+  test("Spark's grammar owns MERGE / UPDATE / DELETE / ALTER / CREATE / " +
+      "INSERT on txlog tables: parsePlan returns Spark's node, never " +
+      "graft's command") {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val t = "txlog.`/tmp/graft-txsql/parse`"
+    Seq[(String, Class[_])](
+      s"MERGE INTO $t USING s ON $t.k = s.k WHEN MATCHED THEN DELETE" ->
+        classOf[MergeIntoTable],
+      s"MERGE WITH SCHEMA EVOLUTION INTO $t USING s ON $t.k = s.k " +
+        "WHEN NOT MATCHED THEN INSERT *" -> classOf[MergeIntoTable],
+      s"UPDATE $t SET v = 1 WHERE k = 2" -> classOf[UpdateTable],
+      s"DELETE FROM $t WHERE k = 1" -> classOf[DeleteFromTable],
+      s"ALTER TABLE $t ADD COLUMNS (c INT)" -> classOf[AddColumns],
+      s"ALTER TABLE $t RENAME COLUMN a TO b" -> classOf[RenameColumn],
+      s"ALTER TABLE $t DROP COLUMN a" -> classOf[DropColumns],
+      s"ALTER TABLE $t SET TBLPROPERTIES ('a' = 'b')" ->
+        classOf[SetTableProperties],
+      s"ALTER TABLE $t UNSET TBLPROPERTIES ('a')" ->
+        classOf[UnsetTableProperties],
+      s"CREATE TABLE $t (k INT, p STRING) PARTITIONED BY (p)" ->
+        classOf[CreateTable],
+      s"CREATE TABLE $t PARTITIONED BY (p) AS SELECT 1 AS k, 'x' AS p" ->
+        classOf[CreateTableAsSelect],
+      s"REPLACE TABLE $t (k INT, p STRING) PARTITIONED BY (p)" ->
+        classOf[ReplaceTable],
+      s"CREATE OR REPLACE TABLE $t PARTITIONED BY (p) AS SELECT 1 AS k" ->
+        classOf[ReplaceTableAsSelect],
+      s"INSERT INTO $t SELECT 1" -> classOf[InsertIntoStatement],
+      s"SHOW TBLPROPERTIES $t" -> classOf[ShowTableProperties]
+    ).foreach { case (sql, cls) =>
+      val plan = spark.sessionState.sqlParser.parsePlan(sql)
+      assert(cls.isInstance(plan) && !plan.isInstanceOf[graft.plans.TxSqlCommand],
+        s"$sql parsed to ${plan.getClass.getName}")
+    }
   }
 }
